@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
@@ -169,15 +170,24 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
     })
 
 
-def ensure(root: str, seed: int, sf: float) -> str:
+def data_dir(root: str, seed: int, sf: float) -> str:
+    """The directory the queries read (``sf_dir``) for ``(seed, sf)``."""
+    return os.path.join(root, f"seed{seed}", f"sf{sf}")
+
+
+def ensure(root: str, seed: int, sf: float) -> None:
     """Write the tables for ``(seed, sf)`` under ``root`` unless already
-    there; return the directory the queries read (``sf_dir``)."""
-    out = os.path.join(root, f"seed{seed}", f"sf{sf}")
+    there."""
+    out = data_dir(root, seed, sf)
     done = os.path.join(out, "_COMPLETE")
     if os.path.exists(done):
-        return out
+        return
     os.makedirs(out, exist_ok=True)
     for name, table in _tables(seed, sf).items():
         pq.write_table(table, os.path.join(out, f"{name}.parquet"))
     open(done, "w").close()
-    return out
+
+
+if __name__ == "__main__":
+    # python3 datagen.py ROOT SEED SF
+    ensure(sys.argv[1], int(sys.argv[2]), float(sys.argv[3]))

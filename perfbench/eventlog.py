@@ -34,12 +34,8 @@ FIELDS = (
 
 
 def log_files(log_dir: str, app_id: str) -> list[str]:
-    """Event-log files of ``app_id``: one plain file, or the numbered
-    parts of a rolling ``eventlog_v2_<app>`` directory."""
-    rolled = os.path.join(log_dir, f"eventlog_v2_{app_id}")
-    if os.path.isdir(rolled):
-        parts = glob.glob(os.path.join(rolled, "events_*"))
-        return sorted(parts, key=lambda p: int(os.path.basename(p).split("_")[1]))
+    """Event-log file of ``app_id``; run.py turns rolling logs off, so
+    there is one plain file."""
     return [p for p in glob.glob(os.path.join(log_dir, app_id + "*"))
             if os.path.isfile(p)]
 

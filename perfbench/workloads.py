@@ -25,18 +25,10 @@ CORPUS_OPS = [
     "dedup_minhash_lsh", "cms_top_terms", "image_pixel_decode",
     "source_jsonl_roundtrip",
 ]
-# sf0.1 TPC-H and relational builders to the noop sink. Not in
-# BENCHMARK.json (the run-time budget holds two workloads); run it by name
-# for JVM-side work such as join-threshold changes.
-OLAP_OPS = [
-    "hash_agg_q1", "q3_shipping_priority", "q6_forecast_revenue",
-    "join_inner", "window_row_number",
-]
 WORKLOADS = {
     # name -> (scale factor of its input tables, builder ops or None for SQL)
     "sql_interactive": (0.1, None),
     "corpus_cold": (0.01, CORPUS_OPS),
-    "olap_sf01": (0.1, OLAP_OPS),
 }
 MB = 1024.0 * 1024.0
 
@@ -160,8 +152,7 @@ class Runner:
         """Build the inventory query and run it into the noop sink, or with
         ``collect`` into a pandas frame kept for the output check."""
         op = self._new_op(name, group)
-        if self.workload == "corpus_cold":
-            self.spark.catalog.clearCache()      # untimed: start cold
+        self.spark.catalog.clearCache()      # untimed: start cold
         root = self._span("op")
         t0 = time.perf_counter()
         try:
