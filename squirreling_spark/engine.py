@@ -19,7 +19,6 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
-import threading
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -256,8 +255,16 @@ def _coerce_row(row: dict, schema) -> tuple:
     return tuple(out)
 
 
-def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> None:
+def _register_tables(
+    spark: SparkSession, tables: dict[str, Any], renames: dict[str, str]
+) -> dict[str, Any]:
+    """Register every source as a temp view (under its ``renames`` entry
+    when it has one) and return the query's namespace ``{name: schema}``.
+    Memory tables keep the schema inferred here; DataFrame and path
+    sources are read once."""
+    schemas = {}
     for name, source in tables.items():
+        schema = None
         if isinstance(source, DataFrame):
             df = source
         elif isinstance(source, str):
@@ -281,7 +288,22 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> None:
             )
         else:
             raise TypeError(f"unsupported table source for {name!r}: {type(source)}")
-        df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(renames.get(name, name))
+        schemas[name] = df.schema if schema is None else schema
+    return schemas
+
+
+def _session_views(spark: SparkSession) -> dict[str, Any]:
+    """The namespace of a query given no ``tables`` map: one snapshot of
+    the session's temp views, ``{name: schema}`` in name order."""
+    schemas = {}
+    for t in sorted(spark.catalog.listTables(), key=lambda t: t.name):
+        if t.isTemporary:
+            try:
+                schemas[t.name] = spark.table(t.name).schema
+            except Exception:  # noqa: BLE001 — unreadable view: skip
+                pass
+    return schemas
 
 
 def extract_tables(spark: SparkSession, query: str) -> list[str]:
@@ -418,6 +440,13 @@ def execute_sql(
     """Run SQL over a per-query table namespace with optional scalar UDFs —
     the reference's ``executeSql({tables, query, functions})``.
 
+    The namespace decides every column type the dialect rewrites,
+    strict validation and error messages see: exactly the ``tables`` map
+    when one is given (an empty map is an empty namespace), otherwise one
+    snapshot of the session's temp views taken at the start of the call.
+    Other views registered in the session never change how a query with
+    a ``tables`` map is rewritten.
+
     ``strict=True`` opts into the reference's REJECTIONS as well as its
     acceptances: function arity/type validation, cast-target and interval
     allowlists, join-shape and LATERAL VIEW rules, window-vs-GROUP-BY
@@ -437,18 +466,22 @@ def execute_sql(
     ``cache_tables`` memoizes the named tables across queries
     (``df.cache()`` — the reference's cachedDataSource cell memoization,
     src/backend/dataSource.js:80-129, at DataFrame granularity)."""
-    from squirreling_spark.functions.sqldialect import rewrite_reference_sql
-
+    from squirreling_spark.functions.sqldialect import (
+        positional_join_views,
+        rewrite_reference_sql,
+    )
     from squirreling_spark.functions.sqlregistry import (
         register_reference_functions,
     )
 
     register_reference_functions(spark)
-    # Strict validation runs on the PRE-rename text with the PRE-rename
-    # table keys: the reference rejects `FROM dataset.parquet` unquoted
-    # even when "dataset.parquet" is a flat table-map key, and the rename
-    # shim below would erase exactly that evidence.
-    orig_query, orig_tables = query, tables
+    # Strict validation and the error mapping run on the PRE-rename text
+    # with the caller's table keys: the reference rejects `FROM
+    # dataset.parquet` unquoted even when "dataset.parquet" is a flat
+    # table-map key, and the rename shim below would erase exactly that
+    # evidence.
+    orig_query = query
+    renames: dict[str, str] = {}
     if tables:
         # Names Spark can't hold in a temp view (dots: ``dataset.parquet``
         # is a FLAT name in the reference's table map, not a schema path)
@@ -462,19 +495,22 @@ def execute_sql(
             for name in tables
             if not _re.fullmatch(r"[A-Za-z_]\w*", name)
         }
-        if renames:
-            tables = {renames.get(k, k): v for k, v in tables.items()}
-            for orig, safe in renames.items():
-                for pat in (f'"{orig}"', f"`{orig}`"):
-                    query = query.replace(pat, safe)
-                query = _re.sub(
-                    r"(\bFROM\s+|\bJOIN\s+|,\s*)"
-                    + _re.escape(orig)
-                    + r"(?=[\s,)]|$)",
-                    lambda m: m.group(1) + safe,
-                    query,
-                )
-        _register_tables(spark, tables)
+        for orig, safe in renames.items():
+            for pat in (f'"{orig}"', f"`{orig}`"):
+                query = query.replace(pat, safe)
+            query = _re.sub(
+                r"(\bFROM\s+|\bJOIN\s+|,\s*)"
+                + _re.escape(orig)
+                + r"(?=[\s,)]|$)",
+                lambda m: m.group(1) + safe,
+                query,
+            )
+    # The query's namespace {name: schema}, keyed by the caller's names;
+    # the dialect rewrites see the renamed text, so they get safe keys.
+    schemas = (
+        _session_views(spark) if tables is None
+        else _register_tables(spark, tables, renames)
+    )
     for name in cache_tables or []:
         spark.catalog.cacheTable(name)
     if functions:
@@ -486,12 +522,13 @@ def execute_sql(
         )
 
         validate_reference_sql(
-            orig_query, spark=spark, tables=orig_tables,
-            functions=functions,
+            orig_query, tables=tables, functions=functions,
+            schemas=schemas,
         )
+    safe_schemas = {renames.get(k, k): v for k, v in schemas.items()}
     query = rewrite_reference_sql(
         query, spark=spark, like_mode=like_mode, pos_order=pos_order,
-        ident_quotes=ident_quotes,
+        ident_quotes=ident_quotes, schemas=safe_schemas,
     )
     if strict:
         query = strict_guards(query)
@@ -507,7 +544,7 @@ def execute_sql(
         if "MISSING_AGGREGATION" in msg or "MISSING_GROUP_BY" in msg:
             from squirreling_spark.functions.sqldialect import loosen_group_by
 
-            loose = loosen_group_by(query, spark=spark)
+            loose = loosen_group_by(query, schemas=safe_schemas)
             if loose is not None:
                 try:
                     return QueryResult(
@@ -570,27 +607,13 @@ def execute_sql(
 
             tm = _re.search(r"`([^`\s]+)`(?:\s*,)?\s+cannot be found", msg)
             bad = tm.group(1).split("`.`")[-1] if tm else "?"
-            if orig_tables:
-                available = list(orig_tables)
-            else:
-                available = sorted(
-                    t.name for t in spark.catalog.listTables()
-                    if t.isTemporary
-                )
             raise TableNotFoundError(
                 f'Table "{bad}" not found. Available tables: '
-                + ", ".join(available),
+                + ", ".join(schemas),
                 pos,
             ) from exc
         if "UNRESOLVED_COLUMN" in msg:
             import re as _re
-
-            def _cols_of(v) -> list[str]:
-                if hasattr(v, "columns"):
-                    return list(v.columns)
-                if isinstance(v, list) and v:
-                    return list(v[0].keys())
-                return []
 
             cm = _re.search(r"name `((?:[^`]+`\.`)*[^`]+)` cannot", msg)
             bad = cm.group(1).replace("`.`", ".") if cm else "?"
@@ -621,14 +644,14 @@ def execute_sql(
                         pos,
                     ) from exc
             available: list[str] = []
-            if orig_tables:
+            if tables:
                 if "." in bad:
                     # reference resolves a qualified ref against ITS
                     # table (alias or name) and lists that table's
                     # columns; the message carries the bare column
                     qual, bare = bad.rsplit(".", 1)
                     target = None
-                    if qual in orig_tables:
+                    if qual in schemas:
                         target = qual
                     else:
                         am = _re.search(
@@ -636,22 +659,22 @@ def execute_sql(
                             r"(?:AS\s+)?" + _re.escape(qual) + r"\b",
                             orig_query, _re.I,
                         )
-                        if am and am.group(1) in orig_tables:
+                        if am and am.group(1) in schemas:
                             target = am.group(1)
                     if target is not None:
-                        available = _cols_of(orig_tables[target])
+                        available = schemas[target].fieldNames()
                         bad = bare
                 if not available:
                     scoped = [
-                        t for t in orig_tables
+                        t for t in schemas
                         if _re.search(
                             r"\b(?:FROM|JOIN)\s+[\"`]?" + _re.escape(t)
                             + r"[\"`]?(?![\w.])",
                             orig_query, _re.I,
                         )
-                    ] or list(orig_tables)
+                    ] or list(schemas)
                     for t in scoped:
-                        for c in _cols_of(orig_tables[t]):
+                        for c in schemas[t].fieldNames():
                             if c not in available:
                                 available.append(c)
             if available:
@@ -660,7 +683,7 @@ def execute_sql(
                     + ", ".join(available),
                     pos,
                 ) from exc
-            if orig_tables is not None:
+            if tables is not None:
                 raise ColumnNotFoundError(
                     f'Column "{bad}" not found', pos
                 ) from exc
@@ -674,7 +697,7 @@ def execute_sql(
 
             sm = _re.search(r"Cannot resolve `([^`]+)`\.?\*", msg)
             star = sm.group(1).replace("`.`", ".") if sm else "?"
-            vis = ", ".join(_visible_tables(orig_query, orig_tables))
+            vis = ", ".join(_visible_tables(orig_query, tables))
             raise TableNotFoundError(
                 f'Table "{star}" not found in "{star}.*". '
                 f"Available tables: {vis}",
@@ -724,6 +747,11 @@ def execute_sql(
                     f"Cannot CAST object to {tgt}", pos
                 ) from exc
         raise
+    finally:
+        # A planned DataFrame keeps its analyzed plan, so the POSITIONAL
+        # JOIN helper views can go once the last spark.sql call returns.
+        for view in positional_join_views(query):
+            spark.catalog.dropTempView(view)
     return QueryResult(df=df, job_group=job_group, _spark=spark)
 
 

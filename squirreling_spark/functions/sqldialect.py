@@ -36,9 +36,7 @@ dynamically-typed JS engine meets SQL):
 
 from __future__ import annotations
 
-import contextlib
 import re
-import threading
 import uuid
 
 from pyspark.sql import SparkSession
@@ -540,97 +538,46 @@ _KEYWORDS = {
 }
 
 
-# Per-rewrite-call resolution cache: every _ref_field lookup otherwise
-# costs a catalog.listTables() plus one spark.table().schema analysis PER
-# VIEW — py4j round-trips that dominated wishlist_digest's build time
-# (16 execute_sql rewrites × several refs × several views). The cache
-# lives only for the duration of ONE rewrite_reference_sql call (views
-# cannot change mid-rewrite), so it is always coherent.
-_REF_CACHE = threading.local()
+def _schema_of(schemas, table: str):
+    """Schema of ``table`` in the query's namespace ``{name: StructType}``,
+    or None. Names match case-insensitively, as Spark's temp views do."""
+    if not schemas:
+        return None
+    if table in schemas:
+        return schemas[table]
+    low = table.lower()
+    return next((s for n, s in schemas.items() if n.lower() == low), None)
 
 
-@contextlib.contextmanager
-def ref_resolution_cache():
-    """Hold ONE schema-resolution snapshot across MULTIPLE execute_sql
-    calls (rewrite_reference_sql reuses an already-active cache). For
-    multi-statement digests that register their views once and then run
-    many statements against them — catalog.listTables() + per-view
-    schema analysis cost ~200 ms per uncached rewrite. Only safe while
-    the temp-view set is not mutated between the wrapped statements."""
-    had = getattr(_REF_CACHE, "c", None)
-    if had is None:
-        _REF_CACHE.c = {}
-    try:
-        yield
-    finally:
-        if had is None:
-            _REF_CACHE.c = None
-
-
-def _ref_field(spark, ref: str):
+def _ref_field(schemas, ref: str):
     """StructField of a simple column reference (``col`` or ``tbl.col``)
-    against the session's temp views, or None when it can't be resolved
-    (expression args, unknown tables)."""
-    if spark is None or not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", ref):
+    in the query's table namespace ``{name: StructType}``, or None when it
+    can't be resolved (expression args, unknown tables)."""
+    if not schemas or not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", ref):
         return None
-    cache = getattr(_REF_CACHE, "c", None)
-    if cache is not None and ref in cache:
-        return cache[ref]
-    f = _ref_field_uncached(spark, ref, cache)
-    if cache is not None:
-        cache[ref] = f
-    return f
-
-
-def _view_schemas(spark, cache):
-    """{view name: schema} for the session's temp views, snapshotted once
-    per rewrite call when a cache is active."""
-    if cache is not None and "__views__" in cache:
-        return cache["__views__"]
-    views = {}
-    for t in spark.catalog.listTables():
-        if t.isTemporary:
-            try:
-                views[t.name] = spark.table(t.name).schema
-            except Exception:  # noqa: BLE001 — unreadable view: skip
-                pass
-    if cache is not None:
-        cache["__views__"] = views
-    return views
-
-
-def _ref_field_uncached(spark, ref: str, cache=None):
-    try:
-        parts = ref.split(".")
-        if len(parts) == 2:
-            for f in spark.table(parts[0]).schema.fields:
-                if f.name == parts[1]:
-                    return f
-            return None
-        for schema in _view_schemas(spark, cache).values():
-            for f in schema.fields:
-                if f.name == ref:
-                    return f
-    except Exception:  # noqa: BLE001 — resolution is best-effort
-        return None
+    table, _, col = ref.rpartition(".")
+    candidates = [_schema_of(schemas, table)] if table else schemas.values()
+    for schema in candidates:
+        if schema is None:
+            continue
+        for f in schema.fields:
+            if f.name == col:
+                return f
     return None
 
 
-def _ref_dtype(spark, ref: str):
+def _ref_dtype(schemas, ref: str):
     """DataType of a simple column reference (see ``_ref_field``)."""
-    f = _ref_field(spark, ref)
+    f = _ref_field(schemas, ref)
     return None if f is None else f.dataType
 
 
-def _is_dynamic_ref(spark, ref: str) -> bool:
+def _is_dynamic_ref(schemas, ref: str) -> bool:
     """True when ``ref`` resolves to a JSON-text DYNAMIC column (a
     memory-table column that mixed scalar JS types — engine.py tags the
     StructField with DYNAMIC_COL_META)."""
-    f = _ref_field(spark, ref.strip())
-    try:
-        return bool(f is not None and f.metadata.get("sq_dynamic"))
-    except Exception:  # noqa: BLE001 — metadata access is best-effort
-        return False
+    f = _ref_field(schemas, ref.strip())
+    return f is not None and bool(f.metadata.get("sq_dynamic"))
 
 
 def _dyn_num(ref: str) -> str:
@@ -641,7 +588,7 @@ def _dyn_num(ref: str) -> str:
     return f"TRY_CAST(get_json_object({ref}, '$') AS DOUBLE)"
 
 
-def _rewrite_json_each_from(q: str, spark=None) -> str:
+def _rewrite_json_each_from(q: str, schemas=None) -> str:
     """Rewrite FROM-clause JSON_EACH into Spark constructs:
 
     - ``FROM JSON_EACH(x) [AS j[(k[, v])]]`` →
@@ -673,7 +620,7 @@ def _rewrite_json_each_from(q: str, spark=None) -> str:
         # STRING cast ('{1, Alice}') is not JSON; to_json(col) is
         from pyspark.sql import types as T
 
-        dt = _ref_dtype(spark, arg)
+        dt = _ref_dtype(schemas, arg)
         if isinstance(dt, (T.StructType, T.ArrayType, T.MapType)):
             arg = f"to_json({arg})"
         dispatch = _JE_DISPATCH.format(x=arg)
@@ -804,7 +751,7 @@ _UNNEST_ALIAS_RE = re.compile(
 )
 
 
-def _rewrite_unnest_from(q: str, spark=None) -> str:
+def _rewrite_unnest_from(q: str, schemas=None) -> str:
     """Table-function UNNEST/EXPLODE onto Spark explode:
 
     - ``FROM UNNEST(arr) AS t``           → derived table, column ``unnest``
@@ -930,7 +877,7 @@ def _rewrite_unnest_from(q: str, spark=None) -> str:
         # fields through the alias, test/execute/execute.unnest.test.js)
         from pyspark.sql import types as T
 
-        dt = _ref_dtype(spark, arg)
+        dt = _ref_dtype(schemas, arg)
         body = f"SELECT explode({arg}) AS {colname}"
         if isinstance(dt, T.ArrayType) and isinstance(
             dt.elementType, T.StructType
@@ -1229,7 +1176,7 @@ _OB_ITEM_RE = re.compile(
 _OB_STOP_KW = re.compile(r"(?i)^(LIMIT|OFFSET|UNION|EXCEPT|INTERSECT)\b")
 
 
-def _rewrite_dynamic_orderby(q: str, spark) -> str:
+def _rewrite_dynamic_orderby(q: str, schemas) -> str:
     """ORDER BY on a bare DYNAMIC column → numeric coercion
     (``TRY_CAST(get_json_object(c,'$') AS DOUBLE)``): the reference's
     dynamic comparator is the JS ``<`` operator, which coerces the
@@ -1266,7 +1213,7 @@ def _rewrite_dynamic_orderby(q: str, spark) -> str:
             if im is None:
                 continue
             ref = im.group(1)
-            if _is_dynamic_ref(spark, ref):
+            if _is_dynamic_ref(schemas, ref):
                 seg = q[s:e]
                 new_seg = seg.replace(ref, _dyn_num(ref), 1)
                 out = out[:s] + new_seg + out[e:]
@@ -1280,7 +1227,7 @@ _WHERE_BARE_RE = re.compile(
 )
 
 
-def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
+def _rewrite_dynamic_where_truthy(q: str, schemas) -> str:
     """``WHERE dyncol`` (the whole condition is one bare DYNAMIC column)
     → JS truthiness over the JSON text: null/false/0/'' are falsy, any
     JSON string (even '"0"') is truthy, numbers by ≠ 0
@@ -1291,7 +1238,7 @@ def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
         if mask[m.start()]:
             continue
         ref = m.group(1)
-        if not _is_dynamic_ref(spark, ref):
+        if not _is_dynamic_ref(schemas, ref):
             continue
         num = _dyn_num(ref)
         cond = (
@@ -1303,12 +1250,12 @@ def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
     return out
 
 
-def _rewrite_dynamic_typing(q: str, spark=None) -> str:
-    """Dtype-directed rewrites needing the session's view schemas."""
+def _rewrite_dynamic_typing(q: str, schemas=None) -> str:
+    """Dtype-directed rewrites over the query's table namespace."""
     from pyspark.sql import types as T
 
     def _resolves_non_array(ref: str) -> bool:
-        dt = _ref_dtype(spark, ref.strip())
+        dt = _ref_dtype(schemas, ref.strip())
         return dt is not None and not isinstance(dt, T.ArrayType)
 
     # Array family on a statically-non-array column → NULL (reference
@@ -1342,14 +1289,14 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
             # — `val.length` covers both); Spark's len/length reject them,
             # so dispatch resolvable array inputs to size().
             if name == "LEN" and len(args) == 1:
-                dt = _ref_dtype(spark, args[0].strip())
+                dt = _ref_dtype(schemas, args[0].strip())
                 if isinstance(dt, T.ArrayType):
                     repl = f"size({args[0]})"
             # ARRAY_LENGTH(a, d): a dimension beyond the STATIC nesting
             # depth is null for every row (evaluate.js:582-591)
             if name == "ARRAY_LENGTH" and len(args) == 2:
                 dm = re.fullmatch(r"\s*(\d+)\s*", args[1])
-                dt = _ref_dtype(spark, args[0].strip())
+                dt = _ref_dtype(schemas, args[0].strip())
                 if dm and dt is not None:
                     for _ in range(int(dm.group(1)) - 1):
                         if not isinstance(dt, T.ArrayType):
@@ -1367,7 +1314,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
     def _length_dispatch(args):
         if len(args) != 1:
             return None
-        dt = _ref_dtype(spark, args[0].strip())
+        dt = _ref_dtype(schemas, args[0].strip())
         if isinstance(dt, T.ArrayType):
             return f"size({args[0]})"
         return None
@@ -1388,7 +1335,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
             r"\s*(BOTH|LEADING|TRAILING)\b", args[0], re.I
         ):
             return None
-        dt = _ref_dtype(spark, args[0].strip())
+        dt = _ref_dtype(schemas, args[0].strip())
         if isinstance(dt, (T.StructType, T.MapType)) or (
             isinstance(dt, T.ArrayType)
         ):
@@ -1418,7 +1365,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
             if len(args) != 1:
                 return None
             ref = args[0].strip()
-            if not _is_dynamic_ref(spark, ref):
+            if not _is_dynamic_ref(schemas, ref):
                 return None
             return f"{fname}({_dyn_num(ref)})"
 
@@ -1431,8 +1378,8 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
             _dyn_agg(aggname.lower()),
         )
 
-    q = _rewrite_dynamic_orderby(q, spark)
-    q = _rewrite_dynamic_where_truthy(q, spark)
+    q = _rewrite_dynamic_orderby(q, schemas)
+    q = _rewrite_dynamic_where_truthy(q, schemas)
 
     # CAST dialect: JS Number(Date) is epoch MILLISECONDS (evaluate.js:
     # 707-726 casts primitives-and-Dates; Number coercion of a Date is
@@ -1445,7 +1392,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
         if not m:
             return None
         ref, target = m.group(1).strip(), m.group(2).upper()
-        if _is_dynamic_ref(spark, ref):
+        if _is_dynamic_ref(schemas, ref):
             dec = f"get_json_object({ref}, '$')"
             if target == "TIMESTAMP":
                 # a numeric dynamic member is epoch ms (JS new Date(ms));
@@ -1462,7 +1409,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
         # Numeric operands: resolved numeric column, numeric literal, or
         # an expression our own ms-cast rewrites just produced.
         if target == "TIMESTAMP":
-            ndt = _ref_dtype(spark, ref)
+            ndt = _ref_dtype(schemas, ref)
             numeric = isinstance(
                 ndt, (T.LongType, T.IntegerType, T.DoubleType,
                       T.FloatType, T.DecimalType, T.ShortType)
@@ -1474,7 +1421,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
             if numeric:
                 return f"timestamp_millis(CAST({ref} AS BIGINT))"
             return None
-        dt = _ref_dtype(spark, ref)
+        dt = _ref_dtype(schemas, ref)
         if dt is None:
             return None
         if isinstance(dt, (T.TimestampType, T.DateType)):
@@ -1695,7 +1642,7 @@ def _rewrite_correlated_unnest_count(q: str) -> str:
 _SUBSCRIPT_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*\[")
 
 
-def _rewrite_dynamic_access(q: str, spark=None) -> str:
+def _rewrite_dynamic_access(q: str, schemas=None) -> str:
     """Subscript / field chains whose STATIC type makes the reference
     return null — ``name[0]`` on a string column, any access on an
     all-null (void) column, ``arr[0].missing`` on a struct without the
@@ -1708,7 +1655,7 @@ def _rewrite_dynamic_access(q: str, spark=None) -> str:
         m for m in _SUBSCRIPT_RE.finditer(q) if not mask[m.start()]
     ]
     for m in reversed(matches):
-        dt = _ref_dtype(spark, m.group(1))
+        dt = _ref_dtype(schemas, m.group(1))
         if dt is None:
             continue
         # walk the accessor chain: [expr] and .field steps
@@ -2373,13 +2320,14 @@ def _collapse_dots(item: str) -> str:
 _SELECT_HEAD_RE = re.compile(r"\bSELECT\b(\s+(?:DISTINCT|ALL)\b)?", re.I)
 
 
-def loosen_group_by(q: str, spark=None) -> str | None:
+def loosen_group_by(q: str, schemas=None) -> str | None:
     """Reference-style loose GROUP BY: non-aggregated bare columns in the
     select list take the group's first value (the reference's row-object
     evaluation keeps whatever the first row held). Rewrites them to
     ``any_value(col) AS col``; returns None when nothing applies — the
     engine retries with this ONLY after Spark raises MISSING_AGGREGATION,
-    so strict queries keep strict errors."""
+    so strict queries keep strict errors. ``schemas`` is the query's
+    table namespace, used to expand ``SELECT *``."""
     gm = re.search(r"\bGROUP\s+BY\b", q, re.I)
     if gm and not _string_mask(q)[gm.start()]:
         # group-by keys: up to the next top-level clause keyword
@@ -2409,18 +2357,14 @@ def loosen_group_by(q: str, spark=None) -> str | None:
     # `SELECT * .. GROUP BY k`: the reference keeps the group's first row
     # for every non-key column. Expand the star from the (single, bare)
     # FROM table so each column can be wrapped individually.
-    if spark is not None and any(i.strip() == "*" for i in items):
+    if any(i.strip() == "*" for i in items):
         tm = re.match(r"\s*FROM\s+([A-Za-z_]\w*)", q[end:], re.I)
-        if tm:
-            try:
-                cols = spark.table(tm.group(1)).columns
-            except Exception:  # noqa: BLE001 — leave the star alone
-                cols = None
-            if cols:
-                expanded = []
-                for i in items:
-                    expanded.extend(cols if i.strip() == "*" else [i])
-                items = expanded
+        schema = _schema_of(schemas, tm.group(1)) if tm else None
+        if schema is not None:
+            expanded = []
+            for i in items:
+                expanded.extend(schema.fieldNames() if i.strip() == "*" else [i])
+            items = expanded
     changed = False
     out = []
     for item in items:
@@ -2638,18 +2582,21 @@ _POS_RE = re.compile(
     re.I,
 )
 _STAR_RE = re.compile(r"(\bSELECT\s+)\*", re.I)
+_POSV_PREFIX = "__sq_posv_"
 
 
 def _rewrite_positional_join(
     q: str,
     spark: SparkSession,
+    schemas,
     pos_order: dict[str, list[str]] | None = None,
 ) -> str:
     """``FROM a POSITIONAL JOIN b`` → full outer join of the two sides'
-    row-numbered views on the window-free global row number
-    (`operators/positional_join._with_rn` — parallel range numbering, no
-    single-task WindowExec). ``SELECT *`` is expanded to the explicit
-    column list so the internal row-number column stays hidden."""
+    row-numbered helper views (``_POSV_PREFIX``) on the window-free global
+    row number (`operators/positional_join._with_rn` — parallel range
+    numbering, no single-task WindowExec). ``SELECT *`` is expanded to the
+    explicit column list from ``schemas`` so the internal row-number
+    column stays hidden."""
     mask = _string_mask(q)
     m = _POS_RE.search(q)
     while m and mask[m.start()]:
@@ -2657,15 +2604,22 @@ def _rewrite_positional_join(
     if not m:
         return q
     lt, la, rt, ra = m.group(1), m.group(2), m.group(3), m.group(4)
+    sides = []
+    for name in (lt, rt):
+        schema = _schema_of(schemas, name)
+        if schema is None:
+            raise ValueError(
+                f'POSITIONAL JOIN: table "{name}" not found. Available '
+                f"tables: {', '.join(schemas or {})}"
+            )
+        sides.append(schema)
     la = la or lt.split(".")[-1]
     ra = ra or rt.split(".")[-1]
-    lv = f"__sq_posv_{uuid.uuid4().hex[:8]}"
-    rv = f"__sq_posv_{uuid.uuid4().hex[:8]}"
+    lv = f"{_POSV_PREFIX}{uuid.uuid4().hex[:8]}"
+    rv = f"{_POSV_PREFIX}{uuid.uuid4().hex[:8]}"
     pos_order = pos_order or {}
     _with_rn(spark.table(lt), pos_order.get(lt)).createOrReplaceTempView(lv)
     _with_rn(spark.table(rt), pos_order.get(rt)).createOrReplaceTempView(rv)
-    if getattr(_REF_CACHE, "c", None) is not None:
-        _REF_CACHE.c = {}  # new views mid-rewrite: drop the stale snapshot
     frag = (
         f"FROM {lv} AS {la} FULL OUTER JOIN {rv} AS {ra} "
         f"ON {la}.{_RN} = {ra}.{_RN}"
@@ -2674,13 +2628,18 @@ def _rewrite_positional_join(
     # Expand a bare SELECT * (the rn columns must not leak into it).
     star = _STAR_RE.search(q)
     if star and not _string_mask(q)[star.start()]:
-        lcols = [c for c in spark.table(lt).columns]
-        rcols = [c for c in spark.table(rt).columns]
         cols = ", ".join(
-            [f"{la}.{c}" for c in lcols] + [f"{ra}.{c}" for c in rcols]
+            [f"{la}.{c}" for c in sides[0].fieldNames()]
+            + [f"{ra}.{c}" for c in sides[1].fieldNames()]
         )
         q = q[: star.start()] + star.group(1) + cols + q[star.end() :]
     return q
+
+
+def positional_join_views(q: str) -> set[str]:
+    """Helper views the POSITIONAL JOIN rewrite registered for ``q``; the
+    caller drops them once the query is planned."""
+    return set(re.findall(rf"\b{_POSV_PREFIX}[0-9a-f]{{8}}\b", q))
 
 
 def rewrite_reference_sql(
@@ -2689,6 +2648,7 @@ def rewrite_reference_sql(
     like_mode: str = "ansi",
     pos_order: dict[str, list[str]] | None = None,
     ident_quotes: str = "spark",
+    schemas: dict | None = None,
 ) -> str:
     """Apply the reference-dialect rewrites. The three syntax extensions
     (POSITIONAL JOIN, FROM-clause JSON_EACH, ``123n``) are not valid Spark
@@ -2696,26 +2656,16 @@ def rewrite_reference_sql(
     reference's case-insensitive LIKE (off by default — ANSI semantics and
     the DuckDB oracle agree on case-sensitive LIKE).
 
+    ``schemas`` is the query's table namespace ``{name: StructType}``; the
+    type-directed rewrites (dynamic columns, array/struct dispatch) read
+    column types from it and nowhere else. ``spark`` is needed only to
+    register the POSITIONAL JOIN helper views.
+
     ``pos_order`` maps table names to sort keys defining row position for
     POSITIONAL JOIN. The reference (single-node, ordered arrays) zips
     physical row order; on a distributed engine that order is only
     well-defined given an explicit key — without a hint we zip the current
     scan order (deterministic for single-split files, the DuckDB caveat)."""
-    had_cache = getattr(_REF_CACHE, "c", None)
-    if had_cache is None:
-        _REF_CACHE.c = {}  # fresh per-call resolution cache
-    try:
-        return _rewrite_reference_sql_inner(
-            query, spark, like_mode, pos_order, ident_quotes
-        )
-    finally:
-        if had_cache is None:
-            _REF_CACHE.c = None
-
-
-def _rewrite_reference_sql_inner(
-    query, spark, like_mode, pos_order, ident_quotes
-):
     if ident_quotes == "ansi" and '"' in query:
         query = _rewrite_double_quoted_idents(query)
     query = _rewrite_from_first(query)
@@ -2734,7 +2684,7 @@ def _rewrite_reference_sql_inner(
     if "UNNEST" in up and "COUNT" in up:
         query = _rewrite_correlated_unnest_count(query)
     if "UNNEST" in up or "EXPLODE" in up:
-        query = _rewrite_unnest_from(query, spark)
+        query = _rewrite_unnest_from(query, schemas)
     up = query.upper()
     if "POSITIONAL" in up:
         if spark is None:
@@ -2743,17 +2693,18 @@ def _rewrite_reference_sql_inner(
         prev = None
         while prev != query:
             prev = query
-            query = _rewrite_positional_join(query, spark, pos_order)
+            query = _rewrite_positional_join(
+                query, spark, schemas, pos_order
+            )
             up = query.upper()
     if "JSON_EACH" in up:
-        query = _rewrite_json_each_from(query, spark)
+        query = _rewrite_json_each_from(query, schemas)
     up = query.upper()
     if re.search(r"DATE_DIFF|DATEDIFF|EXTRACT|DATE_PART|EPOCH", up):
         query = _rewrite_date_dialect(query)
-    if spark is not None:
-        if "[" in query:
-            query = _rewrite_dynamic_access(query, spark)
-        query = _rewrite_dynamic_typing(query, spark)
+    if "[" in query:
+        query = _rewrite_dynamic_access(query, schemas)
+    query = _rewrite_dynamic_typing(query, schemas)
     query = _rewrite_concat_precedence(query)
     query = _rewrite_function_dialect(query)
     if _BIGINT_RE.search(query):

@@ -442,7 +442,7 @@ def _validate_literal_args(q: str) -> None:
                     )
 
 
-def _validate_string_arg_types(q: str, spark) -> None:
+def _validate_string_arg_types(q: str, schemas) -> None:
     """LENGTH rejects numbers/dates (strings.js:38-46); OCTET_LENGTH is
     string-only (:48-56). With a statically-typed column the reference
     would throw on the first row — strict mode throws up front."""
@@ -458,7 +458,7 @@ def _validate_string_arg_types(q: str, spark) -> None:
     for name, pos, args in _iter_calls(q):
         if name not in ("LENGTH", "OCTET_LENGTH") or len(args) != 1:
             continue
-        dt = _ref_dtype(spark, args[0].strip())
+        dt = _ref_dtype(schemas, args[0].strip())
         if dt is None:
             continue
         kind = (
@@ -667,7 +667,7 @@ def _validate_dotted_from(q: str) -> None:
             )
 
 
-def _validate_dotted_refs(q: str, spark, tables) -> None:
+def _validate_dotted_refs(q: str, schemas, tables) -> None:
     """Unquoted ``a.b`` resolves ONLY when ``a`` is a table/alias in
     scope or a struct column; the reference rejects dotted access to
     FLAT columns named 'a.b' unless quoted (execute.dot tests)."""
@@ -687,7 +687,7 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
             continue
         head = m.group(1)
         if head in scope or isinstance(
-            _ref_dtype(spark, head), T.StructType
+            _ref_dtype(schemas, head), T.StructType
         ):
             continue
         raise StrictDialectError(
@@ -703,7 +703,7 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
         qual = m.group(1)
         if qual in scope:
             continue
-        dt = _ref_dtype(spark, qual)
+        dt = _ref_dtype(schemas, qual)
         if isinstance(dt, (T.StructType,)):
             continue  # struct field access
         # reference TableNotFoundError with qualified usage
@@ -1086,13 +1086,15 @@ def _validate_array_literals(q: str) -> None:
 
 def validate_reference_sql(
     query: str,
-    spark=None,
     tables: dict | None = None,
     functions: dict | None = None,
+    schemas: dict | None = None,
 ) -> None:
     """Raise StrictDialectError where the reference's parser/validator
-    would reject the query. Call on the ORIGINAL query text, after
-    fixture tables are registered (dtype checks), before rewrites."""
+    would reject the query. Call on the ORIGINAL query text, before
+    rewrites. ``schemas`` is the query's table namespace
+    ``{name: StructType}``; the column-type checks run only when it is
+    given."""
     _validate_arity(query, functions)
     _validate_dotted_from(query)
     _validate_known_tables(query, tables)
@@ -1108,9 +1110,9 @@ def validate_reference_sql(
     _validate_aggregate_modifiers(query)
     _validate_setop_names(query)
     _validate_array_literals(query)
-    if spark is not None:
-        _validate_string_arg_types(query, spark)
-        _validate_dotted_refs(query, spark, tables)
+    if schemas is not None:
+        _validate_string_arg_types(query, schemas)
+        _validate_dotted_refs(query, schemas, tables)
 
 
 # --- runtime guards (per-row value rules) ----------------------------------

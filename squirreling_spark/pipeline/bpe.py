@@ -392,20 +392,6 @@ def bpe_encode_oracle_sql(
 WP_SCALE = 1_000_000_000  # score quantized to 1e-9 resolution
 
 
-def _token_counts(vocab: DataFrame) -> DataFrame:
-    """Weighted occurrence count of every token in the current vocab
-    (``<a><b><a>`` with freq 3 contributes a:6, b:3)."""
-    toks = F.split(
-        F.expr("substring(repr, 2, length(repr) - 2)"), "><"
-    )
-    return (
-        vocab.filter(F.length("repr") > 0)
-        .select("freq", F.explode(toks).alias("tok"))
-        .groupBy("tok")
-        .agg(F.sum("freq").cast("bigint").alias("tok_count"))
-    )
-
-
 def wordpiece_train(
     df: DataFrame, text_col: str, merges: int = 8
 ) -> DataFrame:

@@ -795,16 +795,6 @@ def simhash(text_col: str, bits: int = 48) -> F.Column:
     )
 
 
-def simhash_dedup(df: DataFrame, text_col: str, id_col: str, bits: int = 48) -> DataFrame:
-    """Group docs by identical SimHash fingerprint (near-dup clusters)."""
-    return (
-        spread(df.select(id_col, text_col), by=[id_col])
-        .select(F.col(id_col), simhash(text_col, bits).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,

@@ -1299,46 +1299,37 @@ def dialect_digest(spark, sf):
     physical order is not a distributed invariant)."""
     from squirreling_spark.engine import execute_sql
 
-    t(spark, sf, "nation").select("n_nationkey", "n_name") \
-        .createOrReplaceTempView("sq_dl_nat")
-    t(spark, sf, "region").select("r_regionkey", "r_name") \
-        .createOrReplaceTempView("sq_dl_reg")
-    t(spark, sf, "events").select("event_id", "props") \
-        .createOrReplaceTempView("sq_dl_ev")
-    t(spark, sf, "orders").select("o_orderkey") \
-        .createOrReplaceTempView("sq_dl_ord")
-    t(spark, sf, "part").select("p_partkey", "p_name") \
-        .createOrReplaceTempView("sq_dl_prt")
+    tables = {
+        "sq_dl_nat": t(spark, sf, "nation").select("n_nationkey", "n_name"),
+        "sq_dl_reg": t(spark, sf, "region").select("r_regionkey", "r_name"),
+        "sq_dl_ev": t(spark, sf, "events").select("event_id", "props"),
+        "sq_dl_ord": t(spark, sf, "orders").select("o_orderkey"),
+        "sq_dl_prt": t(spark, sf, "part").select("p_partkey", "p_name"),
+    }
     pos_order = {
         "sq_dl_nat": ["n_nationkey"],
         "sq_dl_reg": ["r_regionkey"],
     }
-    from squirreling_spark.functions.sqldialect import ref_resolution_cache
-
     branches = []
-    # shared resolution snapshot across the branch statements (the sq_dl_*
-    # views are registered once above; the positional-join rewrite
-    # invalidates the snapshot itself when it adds its __sq_posv views)
-    with ref_resolution_cache():
-        for tag, (sql, like_mode, ck, _) in _DIALECT_BRANCHES.items():
-            res = execute_sql(
-                spark, sql, like_mode=like_mode, pos_order=pos_order
-            )
-            branches.append(_digest_branch(res.df, tag, ck))
+    for tag, (sql, like_mode, ck, _) in _DIALECT_BRANCHES.items():
+        res = execute_sql(
+            spark, sql, tables=tables, like_mode=like_mode,
+            pos_order=pos_order,
+        )
+        branches.append(_digest_branch(res.df, tag, ck))
     # strict rejection surface: one row per case that raised the
     # reference's error (an accepted-but-should-reject case drops its
     # row and hash-mismatches the oracle's full VALUES list)
     from squirreling_spark.functions.sqlstrict import StrictDialectError
 
     rejected = []
-    with ref_resolution_cache():
-        for case, sql in _STRICT_REJECT_CASES.items():
-            try:
-                execute_sql(spark, sql, strict=True).collect()
-            except StrictDialectError:
-                rejected.append((case,))
-            except Exception:  # noqa: BLE001 — wrong error ≠ rejected
-                pass
+    for case, sql in _STRICT_REJECT_CASES.items():
+        try:
+            execute_sql(spark, sql, tables=tables, strict=True).collect()
+        except StrictDialectError:
+            rejected.append((case,))
+        except Exception:  # noqa: BLE001 — wrong error ≠ rejected
+            pass
     # local_df (r12): pure-JVM LocalRelation — createDataFrame's
     # Python-RDD path scheduled 32 Python-worker tasks per downstream
     # action for this ~30-row list (guide §4)
@@ -1573,30 +1564,24 @@ def wishlist_digest(spark, sf):
     verified as-typed. 15 branches, each checksummed in full vs DuckDB."""
     from squirreling_spark.engine import execute_sql
 
-    t(spark, sf, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    ).createOrReplaceTempView("wl_nat")
-    t(spark, sf, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_orderdate"
-    ).createOrReplaceTempView("wl_ord")
-    t(spark, sf, "events").select("event_id", "props") \
-        .createOrReplaceTempView("wl_ev")
-    t(spark, sf, "part").select("p_partkey", "p_name") \
-        .createOrReplaceTempView("wl_prt")
-    t(spark, sf, "nation").select(
-        "n_nationkey",
-        F.struct(
-            F.col("n_name").alias("name"), F.col("n_regionkey").alias("rk")
-        ).alias("obj"),
-    ).createOrReplaceTempView("wl_obj")
-    from squirreling_spark.functions.sqldialect import ref_resolution_cache
-
+    nation = t(spark, sf, "nation")
+    tables = {
+        "wl_nat": nation.select("n_nationkey", "n_name", "n_regionkey"),
+        "wl_ord": t(spark, sf, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_orderdate"
+        ),
+        "wl_ev": t(spark, sf, "events").select("event_id", "props"),
+        "wl_prt": t(spark, sf, "part").select("p_partkey", "p_name"),
+        "wl_obj": nation.select(
+            "n_nationkey",
+            F.struct(
+                F.col("n_name").alias("name"),
+                F.col("n_regionkey").alias("rk"),
+            ).alias("obj"),
+        ),
+    }
     branches = []
-    # one schema-resolution snapshot across all 16 statements: the wl_*
-    # views are registered once above, so the per-statement
-    # listTables()+schema py4j scans (~200 ms each) are pure overhead
-    with ref_resolution_cache():
-        for tag, (sql, ck, _) in _WISHLIST_BRANCHES.items():
-            res = execute_sql(spark, sql)
-            branches.append(_digest_branch(res.df, tag, ck))
+    for tag, (sql, ck, _) in _WISHLIST_BRANCHES.items():
+        res = execute_sql(spark, sql, tables=tables)
+        branches.append(_digest_branch(res.df, tag, ck))
     return _union_all(branches)

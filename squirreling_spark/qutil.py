@@ -134,13 +134,6 @@ def det_round(col: Column, digits: int = 6) -> Column:
     return F.floor(col * factor + F.lit(0.5)) / F.lit(factor)
 
 
-def o_det_round(expr: str, digits: int = 6) -> str:
-    """DuckDB spelling of det_round — keep adjacent so dialects stay in
-    sync."""
-    factor = 10 ** digits
-    return f"floor(({expr}) * {factor} + 0.5) / {factor}"
-
-
 @_contextmanager
 def pinned_shuffle(spark: SparkSession, n: int = 16):
     """Pin ``spark.sql.shuffle.partitions`` around a streaming cycle and

@@ -20,10 +20,10 @@ def _drop_leaked_temp_views():
     """Cross-module temp-view hygiene: engine.execute_sql registers its
     ``tables=`` fixtures as session-global temp views and returns a LAZY
     result, so callers can't drop them — after a module finishes, any
-    views left behind could collide with a later module's bare-column
-    dtype resolution (the r6 verdict's INVALID_INDEX_OF_ZERO order
-    dependence). Every module registers its own fixtures, so dropping
-    all temporary views at module teardown is safe."""
+    views left behind would still be visible to a later module's query
+    that passes no ``tables`` map (its namespace is the session's temp
+    views). Every module registers its own fixtures, so dropping all
+    temporary views at module teardown is safe."""
     yield
     from pyspark.sql import SparkSession
 

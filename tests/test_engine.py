@@ -414,3 +414,43 @@ def test_qualified_column_not_found_lists_its_table_only(spark):
     assert 'Column "bogus" not found' in msg
     assert "Available columns: id, name" in msg
     assert "amount" not in msg
+
+
+# ------------------------------------------------------ per-query namespace
+# Column types come from the query's own table namespace (the ``tables``
+# map), never from views other queries left in the session.
+
+def test_namespace_ignores_views_of_earlier_queries(spark):
+    q = "SELECT SUM(v) AS s FROM b"
+    b = {"b": [{"v": 5}, {"v": 7}]}
+    assert execute_sql(spark, q, tables=b).collect() == [{"s": 12}]
+    # an earlier query's table with a same-named DYNAMIC column (mixed
+    # int/string) must not turn b's SUM into the JSON-text rewrite
+    execute_sql(spark, "SELECT v FROM a", tables={"a": [{"v": 1}, {"v": "x"}]})
+    assert execute_sql(spark, q, tables=b).collect() == [{"s": 12}]
+
+
+def test_positional_join_leaves_only_its_tables(spark):
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    res = execute_sql(
+        spark,
+        "SELECT pa.x, pb.y FROM pa POSITIONAL JOIN pb",
+        tables={"pa": [{"x": 1}, {"x": 2}], "pb": [{"y": "u"}]},
+    )
+    assert temp_views() == before | {"pa", "pb"}
+    # the planned result still runs once its helper views are gone
+    rows = sorted(res.rows(), key=lambda r: r["x"])
+    assert rows == [{"x": 1, "y": "u"}, {"x": 2, "y": None}]
+
+
+def test_column_not_found_lists_path_source_columns(spark, sf01):
+    with pytest.raises(ColumnNotFoundError) as ei:
+        execute_sql(
+            spark, "SELECT nope FROM r",
+            tables={"r": f"{sf01}/region.parquet"},
+        )
+    assert 'Column "nope" not found. Available columns: r_regionkey, r_name' \
+        in str(ei.value)

@@ -54,11 +54,10 @@ FLOORS = {
 @pytest.fixture(scope="module")
 def conf_spark(spark):
     # Isolated session: shares the JVM/SparkContext but gets its own temp
-    # views, function registry, and confs. The dialect's best-effort
-    # dtype resolution (_ref_dtype) scans ALL temp views for bare column
-    # names, so any earlier test module that leaks a view with a
-    # same-named column would silently change subscript/size rewrites —
-    # newSession() makes that impossible regardless of suite order.
+    # views, function registry, and confs. Column types come from each
+    # case's own tables map, so views other modules leak no longer change
+    # the rewrites; the isolation keeps the two confs below, and the
+    # cases' views and UDFs, apart from the rest of the suite.
     s = spark.newSession()
     # the reference implements JS arithmetic (div-by-zero → NULL)
     s.conf.set("spark.sql.ansi.enabled", "false")
